@@ -28,6 +28,20 @@ def scaled(col: Column, scale: int) -> Column:
     return F.round(col * scale, 0).cast("long")
 
 
+def round_like_duckdb(col: Column, digits: int) -> Column:
+    """ROUND(x, digits) on a DOUBLE, evaluated as DuckDB does:
+    ``round(x * 10^digits, 0) / 10^digits`` in floating point.
+
+    `F.round(x, digits)` rounds the shortest decimal form of x half-up,
+    while DuckDB scales first. Near a half-way tie the two disagree in
+    the last digit (x = 29.63124999999999... prints below the tie, but
+    x * 10^4 rounds to exactly 296312.5 in IEEE and then up). Rounding
+    the scaled value at 0 digits is exact in both engines, so this
+    form matches the oracle's plain ``ROUND(x, digits)``."""
+    scale = float(10**digits)
+    return F.round(col * scale, 0) / scale
+
+
 def mean_from_sums(s: Column, n: Column, scale: int) -> Column:
     """Exact mean: CAST(s AS DOUBLE) / n / scale."""
     return s.cast("double") / n / F.lit(float(scale))

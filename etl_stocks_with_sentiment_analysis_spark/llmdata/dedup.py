@@ -259,6 +259,21 @@ def _table_data_bytes(sf_dir: str, name: str) -> int:
     return total
 
 
+def _sf_tag(sf_dir: str) -> str:
+    """Scratch-prefix tag for one sf_dir: its basename plus a short
+    hash of its ABSOLUTE path. scratch_dir keeps one live dir per
+    prefix, so two sf_dirs (even with the same basename) sharing a
+    prefix would delete each other's live scratch, and frames already
+    returned would fail when collected."""
+    import hashlib
+
+    apath = os.path.abspath(sf_dir)
+    return (
+        os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
+        + "_" + hashlib.md5(apath.encode("utf-8")).hexdigest()[:8]
+    )
+
+
 def _maybe_materialize_bands(
     spark: SparkSession, sf_dir: str, bands: DataFrame
 ) -> DataFrame:
@@ -272,7 +287,7 @@ def _maybe_materialize_bands(
         return bands
     from ..operators.sinks import scratch_dir
 
-    out = os.path.join(scratch_dir("lshband_mat_"), "bands")
+    out = os.path.join(scratch_dir(f"lshband_mat_{_sf_tag(sf_dir)}_"), "bands")
     bands.write.mode("overwrite").parquet(out)
     return spark.read.parquet(out)
 
@@ -1258,22 +1273,10 @@ def _lsh_index_dir(
     (build-audit, probe) read the shared dir directly. The build wall
     is recorded beside the memo for bench sub-walls
     (`shared_lsh_build_wall`). Returns the index directory."""
-    import hashlib
-
     from ..operators.sinks import scratch_dir
 
-    # the scratch prefix embeds a short hash of the ABSOLUTE sf_dir
-    # (r16, ADVICE fix): the memo keys on the absolute path, but the
-    # prefix used to carry only the basename — two sf_dirs with the
-    # same basename in one process would share a prefix, and
-    # scratch_dir's one-live-dir-per-prefix cleanup would delete the
-    # other's live index (rebuild ping-pong + action-time failures on
-    # already-returned lazy frames)
     apath = os.path.abspath(sf_dir)
-    tag = (
-        os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-        + "_" + hashlib.md5(apath.encode("utf-8")).hexdigest()[:8]
-    )
+    tag = _sf_tag(sf_dir)
     memo_key = (spark.sparkContext.applicationId, apath)
     with _LSH_SHARED_LOCK:
         ent = _LSH_SHARED_IDX.get(memo_key)

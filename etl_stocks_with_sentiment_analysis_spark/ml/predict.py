@@ -17,7 +17,7 @@ from ..plans import panel
 from ..registry import register
 from . import tracking
 from .features import LABELS, feature_matrix
-from .train import TrainResult, prepare, train, train_gbt
+from .train import TrainResult, _label_fill, train, train_gbt
 
 from pyspark.ml.feature import VectorAssembler
 
@@ -39,7 +39,7 @@ def predict_next_day(
 ) -> DataFrame:
     """Score the latest row per ticker; returns the prediction-sink
     schema (`ml/data_loader.py:123-136`)."""
-    df = prepare(feature_matrix(spark, sf_dir))
+    df = _label_fill(feature_matrix(spark, sf_dir))
     w = Window.partitionBy("ticker").orderBy(F.desc("date"))
     latest = df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
     assembler = VectorAssembler(
@@ -388,7 +388,7 @@ def udf_model_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     confidence are exposed as invariant booleans (label ∈ LABELS,
     max 3-class probability ∈ [⅓, 1])."""
     result = cached_train(spark, sf_dir)
-    df = prepare(feature_matrix(spark, sf_dir))
+    df = _label_fill(feature_matrix(spark, sf_dir))
     assembler = VectorAssembler(
         inputCols=BASE_FEATURES, outputCol="features", handleInvalid="keep"
     )

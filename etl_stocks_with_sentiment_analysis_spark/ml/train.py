@@ -6,9 +6,11 @@ classifier (`/root/reference/ml/train.py` re-expressed Spark-first).
   XGBoost's `SparkXGBClassifier` slot is gated behind an import-try
   (M3) — not in this image.
 - M5: balanced class weights as a weight COLUMN (total/(k·n_class)
-  joined per row — `compute_sample_weight('balanced')` semantics,
-  `ml/train.py:89-91`), no driver-side loop.
-- M6: MulticlassClassificationEvaluator metrics.
+  as a literal CASE on the label — `compute_sample_weight('balanced')`
+  semantics, `ml/train.py:89-91`); only the k class counts reach the
+  driver.
+- M6: MulticlassClassificationEvaluator's metrics, computed from the
+  k² confusion cells.
 - M7: featureImportances.
 - M8: model.save + metadata JSON.
 
@@ -23,9 +25,8 @@ import os
 from dataclasses import dataclass
 
 from pyspark.ml.classification import RandomForestClassificationModel, RandomForestClassifier
-from pyspark.ml.evaluation import MulticlassClassificationEvaluator
 from pyspark.ml.feature import VectorAssembler
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .features import BASE_FEATURES, LABELS, feature_matrix
@@ -58,24 +59,27 @@ def _label_fill(df: DataFrame) -> DataFrame:
     return df.withColumn("label", label).na.fill(0.0, subset=BASE_FEATURES)
 
 
-def _with_weights(df: DataFrame) -> DataFrame:
-    # M5: weight = total / (n_classes * count(class)). Class counts are
-    # a map-side-combinable groupBy to k rows; total is a window over
-    # that K-ROW frame only (never the data); weights broadcast-join
-    # back per row. No global window over the panel, no collect.
-    counts = df.groupBy("label").agg(F.count("*").alias("n_class"))
-    counts = counts.withColumn(
-        "n_total", F.sum("n_class").over(Window.partitionBy())
-    ).select(
-        "label",
-        (F.col("n_total") / (F.lit(len(LABELS)) * F.col("n_class"))).alias("weight"),
-    )
-    return df.join(F.broadcast(counts), "label")
+def _weight_col(label_counts: dict[float, int]) -> Column:
+    """M5 balanced class weight ``total / (k · n_class)``
+    (`compute_sample_weight('balanced')`) from per-label row counts, as
+    a literal CASE over `label` — k branches, no join back to the data."""
+    total = sum(label_counts.values())
+    out = None
+    for lbl, n in sorted(label_counts.items()):
+        cond, w = F.col("label") == lbl, total / (len(LABELS) * n)
+        out = F.when(cond, w) if out is None else out.when(cond, w)
+    return out
 
 
 def prepare(df: DataFrame) -> DataFrame:
-    """Label-encode target, fill feature NULLs, add balanced weights."""
-    return _with_weights(_label_fill(df))
+    """Label-encode target, fill feature NULLs, add balanced weights
+    (one k-row collect for the class counts)."""
+    labeled = _label_fill(df)
+    counts = {
+        float(r["label"]): r["count"]
+        for r in labeled.groupBy("label").count().collect()
+    }
+    return labeled.withColumn("weight", _weight_col(counts))
 
 
 def balance_cap(
@@ -103,76 +107,126 @@ def balance_cap(
     return df.sampleBy("label", fractions, seed=seed)
 
 
-def chrono_split(df: DataFrame, test_frac: float = 0.3) -> tuple[DataFrame, DataFrame]:
+TEST_FRAC = 0.3  # the chronological holdout's share of distinct dates
+
+
+def _chrono_boundary(dates, test_frac: float):
+    """The last training date: the largest distinct date whose
+    `percent_rank` over the distinct dates, ``(rank - 1) / (n - 1)``,
+    is ≤ 1 - test_frac. None when there are no dates."""
+    dates = sorted(set(dates))
+    n = len(dates)
+    keep = [
+        d for i, d in enumerate(dates)
+        if (i / (n - 1) if n > 1 else 0.0) <= 1 - test_frac
+    ]
+    return keep[-1] if keep else None
+
+
+def chrono_split(df: DataFrame, test_frac: float = TEST_FRAC) -> tuple[DataFrame, DataFrame]:
     """M1 — time-ordered split: train on the earliest (1-test_frac) of
     dates, test on the rest. Split by DATE RANK (not global row
-    number) so the boundary is a date — shuffle-free at scale."""
-    dates = df.select("date").distinct()
-    w = Window.orderBy("date")
-    ranked = dates.withColumn("dr", F.percent_rank().over(w))
-    boundary = ranked.filter(F.col("dr") <= 1 - test_frac).agg(F.max("date")).first()[0]
+    number) so the boundary is a date — shuffle-free at scale; only
+    the distinct dates reach the driver."""
+    boundary = _chrono_boundary(
+        [r[0] for r in df.select("date").distinct().collect()], test_frac
+    )
     return df.filter(F.col("date") <= boundary), df.filter(F.col("date") > boundary)
 
 
-# One persisted assembled train/test split per sf_dir, shared by BOTH
-# trainers (RF and GBT) in a harness run. The iterative fits drive
-# many passes over their input (tree learning levels, boosting
-# rounds, OneVsRest's three binary problems) and the evaluator makes
-# four more — without this cache each pass re-runs the whole feature-
-# matrix lineage (two lineitem scans + join + window spine), which
-# measured 22s per trainer at sf0.01 vs ~2s for the fit itself. The
-# assembled frame is O(panel rows) × ~20 columns — small relative to
-# executor memory at any per-partition granularity (MEMORY_AND_DISK
-# spills, never fails).
+# One assembled train/test split per (sf_dir, balanced), shared by
+# every trainer (RF, GBT, tuned thresholds) in a process. The
+# iterative fits drive many passes over their input (tree levels,
+# boosting rounds, OneVsRest's three binary problems) and each would
+# otherwise re-run the whole feature-matrix lineage (panel joins and
+# the window spine).
 _SPLIT_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
 
 
 def assembled_split(
     spark: SparkSession, sf_dir: str, balanced: bool = False
 ) -> tuple[DataFrame, DataFrame]:
+    """Label-filled, assembled, weighted (train, test) halves of the
+    feature matrix, split chronologically.
+
+    Both halves are filters of ONE persisted frame, coalesced (no
+    shuffle) to at most `defaultParallelism` partitions: a cached
+    plan keeps its shuffle partitioning (AQE may not coalesce it), so
+    an uncoalesced matrix makes every fit level, split and evaluation
+    pay one task per shuffle partition. One `(date, label)` count
+    collect over the persisted frame materializes it and yields both
+    the class weights and the split boundary. The frame is O(panel
+    rows) × ~40 columns; MEMORY_AND_DISK spills, never fails."""
     if (sf_dir, balanced) not in _SPLIT_CACHE:
         from pyspark import StorageLevel
 
-        # persist the PREPARED matrix before splitting: the split
-        # boundary's `.first()` materializes it, and both assembled
-        # halves then derive from the cache — one matrix pass total
-        # instead of boundary + per-half re-lineage
         labeled = _label_fill(feature_matrix(spark, sf_dir))
         if balanced:
             labeled = balance_cap(labeled)
-        df = _with_weights(labeled).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        train_df, test_df = chrono_split(df)
         assembler = VectorAssembler(
             inputCols=BASE_FEATURES, outputCol="features", handleInvalid="keep"
         )
-        atr = assembler.transform(train_df).persist(StorageLevel.MEMORY_AND_DISK)
-        ate = assembler.transform(test_df).persist(StorageLevel.MEMORY_AND_DISK)
-        atr.count()
-        ate.count()
-        df.unpersist()  # assembled halves carry the data from here on
-        _SPLIT_CACHE[(sf_dir, balanced)] = (atr, ate)
+        df = (
+            assembler.transform(labeled)
+            .coalesce(spark.sparkContext.defaultParallelism)
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        label_counts: dict[float, int] = {}
+        dates = []
+        for r in df.groupBy("date", "label").count().collect():
+            lbl = float(r["label"])
+            label_counts[lbl] = label_counts.get(lbl, 0) + r["count"]
+            dates.append(r["date"])
+        boundary = _chrono_boundary(dates, TEST_FRAC)
+        weighted = df.withColumn("weight", _weight_col(label_counts))
+        _SPLIT_CACHE[(sf_dir, balanced)] = (
+            weighted.filter(F.col("date") <= boundary),
+            weighted.filter(F.col("date") > boundary),
+        )
     return _SPLIT_CACHE[(sf_dir, balanced)]
 
 
+def _confusion_cells(pred: DataFrame) -> dict[tuple[int, int], int]:
+    """(label, prediction) -> row count: one distributed groupBy; only
+    the k² cells reach the driver."""
+    return {
+        (int(r["label"]), int(r["prediction"])): r["count"]
+        for r in pred.groupBy("label", "prediction").count().collect()
+    }
+
+
+def _class_prf(
+    cells: dict[tuple[int, int], int], c: int
+) -> tuple[float, float, float, int]:
+    """Precision, recall, F1 and support of class `c` from the
+    confusion cells (0.0 where a ratio has a zero base)."""
+    tp = cells.get((c, c), 0)
+    fp = sum(v for (l, p), v in cells.items() if p == c and l != c)
+    support = sum(v for (l, _), v in cells.items() if l == c)
+    prec = tp / (tp + fp) if tp + fp else 0.0
+    rec = tp / support if support else 0.0
+    f1 = 2 * prec * rec / (prec + rec) if prec + rec else 0.0
+    return prec, rec, f1, support
+
+
 def _holdout_metrics(pred: DataFrame) -> dict[str, float]:
-    """The four MulticlassClassificationEvaluator metrics over ONE
-    persisted (label, prediction) projection — each `evaluate` is a
-    full pass over its input, so evaluating the raw prediction frame
-    four times would re-run model.transform + the matrix lineage four
-    times."""
-    small = pred.select("label", "prediction").persist()
-    try:
-        metrics = {}
-        for name in ("accuracy", "f1", "weightedRecall", "weightedPrecision"):
-            ev = MulticlassClassificationEvaluator(
-                labelCol="label", predictionCol="prediction", metricName=name
-            )
-            metrics[name] = ev.evaluate(small)
-        return metrics
-    finally:
-        small.unpersist()
+    """MulticlassClassificationEvaluator's accuracy, f1 (weighted),
+    weightedRecall and weightedPrecision from ONE collect of the
+    confusion cells — the evaluator makes a full pass over its input
+    per metric. Class weights are supports / total, as in
+    MulticlassMetrics."""
+    cells = _confusion_cells(pred)
+    total = sum(cells.values())
+    metrics = {
+        "accuracy": sum(v for (l, p), v in cells.items() if l == p) / total,
+        "f1": 0.0, "weightedRecall": 0.0, "weightedPrecision": 0.0,
+    }
+    for c in range(len(LABELS)):
+        prec, rec, f1, support = _class_prf(cells, c)
+        metrics["f1"] += f1 * support / total
+        metrics["weightedRecall"] += rec * support / total
+        metrics["weightedPrecision"] += prec * support / total
+    return metrics
 
 
 def train(
@@ -266,25 +320,17 @@ def per_class_metrics(pred: DataFrame) -> list[dict]:
     confusion cells (k = 3 classes) reach the driver, so this is
     collect-safe at any data scale.
     """
-    cells = {
-        (int(r["label"]), int(r["prediction"])): r["count"]
-        for r in pred.groupBy("label", "prediction").count().collect()
-    }
+    cells = _confusion_cells(pred)
     out = []
     for idx, name in enumerate(LABELS):
-        tp = cells.get((idx, idx), 0)
-        fp = sum(c for (l, p), c in cells.items() if p == idx and l != idx)
-        fn = sum(c for (l, p), c in cells.items() if l == idx and p != idx)
-        prec = tp / (tp + fp) if tp + fp else 0.0
-        rec = tp / (tp + fn) if tp + fn else 0.0
-        f1 = 2 * prec * rec / (prec + rec) if prec + rec else 0.0
+        prec, rec, f1, support = _class_prf(cells, idx)
         out.append(
             {
                 "class": name,
                 "precision": round(prec, 4),
                 "recall": round(rec, 4),
                 "f1": round(f1, 4),
-                "support": tp + fn,
+                "support": support,
             }
         )
     return out
@@ -343,15 +389,7 @@ def weighted_argmax_prediction(
 
 
 def _macro_f1(cells: dict[tuple[int, int], int], k: int) -> float:
-    f1s = []
-    for c in range(k):
-        tp = cells.get((c, c), 0)
-        fp = sum(v for (l, p), v in cells.items() if p == c and l != c)
-        fn = sum(v for (l, p), v in cells.items() if l == c and p != c)
-        prec = tp / (tp + fp) if tp + fp else 0.0
-        rec = tp / (tp + fn) if tp + fn else 0.0
-        f1s.append(2 * prec * rec / (prec + rec) if prec + rec else 0.0)
-    return sum(f1s) / k
+    return sum(_class_prf(cells, c)[2] for c in range(k)) / k
 
 
 def search_decision_weights(

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions import exact
 from ..sources import load_table
 
 # ---------------------------------------------------------------------------
@@ -298,7 +299,7 @@ def predictions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(abs_prev < 5, "medium")
         .otherwise("high")
         .alias("predicted_volatility_class"),
-        F.round(abs_prev, 4).alias("predicted_volatility"),
+        exact.round_like_duckdb(abs_prev, 4).alias("predicted_volatility"),
         (F.lit(0.5) + (F.col("volume") % 50).cast("double") / 100.0).alias("confidence"),
         F.when(F.col("ticker") % 2 == 0, "v1.0").otherwise("v2.0").alias("model_version"),
     )
@@ -431,7 +432,7 @@ def scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ticker",
         "date",
         pred_cls.alias("predicted_volatility_class"),
-        F.round(abs_prev, 4).alias("predicted_volatility"),
+        exact.round_like_duckdb(abs_prev, 4).alias("predicted_volatility"),
         (F.lit(0.5) + (F.col("volume") % 50).cast("double") / 100.0).alias(
             "confidence"
         ),

@@ -19,3 +19,29 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def op_jobs(spark, fn):
+    """Run ``fn()`` under a fresh job group and return ``(result, jobs,
+    tasks)``: the Spark jobs it started and the tasks those jobs ran
+    (skipped stages run none), read from the status tracker once the
+    listener bus has delivered every event."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"op_jobs_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "op_jobs")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    tasks = 0
+    for j in jobs:
+        for sid in tracker.getJobInfo(j).stageIds:
+            st = tracker.getStageInfo(sid)
+            tasks += st.numCompletedTasks if st is not None else 0
+    return out, len(jobs), tasks

@@ -97,3 +97,31 @@ def test_cents_matches_round_half_up(v):
 
 def test_std_none_below_two_rows():
     assert formula_std([42]) is None
+
+
+def test_round_like_duckdb_matches_duckdb_at_half_way_ties(spark):
+    """`round_like_duckdb` equals DuckDB's ROUND(x, 4) on values one ulp
+    either side of a 4-digit tie, where plain F.round disagrees (the
+    seed-203 `predicted_volatility` mismatch, 29.6312 vs 29.6313)."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from etl_stocks_with_sentiment_analysis_spark.functions import exact
+
+    vals = []
+    for k in range(296000, 297000):
+        tie = (k + 0.5) / 1e4
+        vals += [tie, math.nextafter(tie, 0.0), math.nextafter(tie, 1e9)]
+    rows = list(enumerate(vals))
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (i BIGINT, x DOUBLE)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+    want = dict(con.execute("SELECT i, ROUND(ABS(x), 4) FROM t").fetchall())
+    df = spark.createDataFrame(rows, "i BIGINT, x DOUBLE")
+    got = df.select(
+        "i",
+        exact.round_like_duckdb(F.abs(F.col("x")), 4).alias("new"),
+        F.round(F.abs(F.col("x")), 4).alias("plain"),
+    ).collect()
+    assert all(r["new"] == want[r["i"]] for r in got)
+    assert any(r["plain"] != want[r["i"]] for r in got)

@@ -50,6 +50,19 @@ def test_minhash_band_materialization_threshold(spark, sf_dir, monkeypatch):
     assert a == b
 
 
+def test_materialized_bands_stay_live_per_sf_dir(spark, sf_dir, monkeypatch):
+    # the band scratch prefix is per sf_dir: building the second frame
+    # must not delete the first one's live scratch parquet
+    monkeypatch.setattr(dedup, "_LSH_MATERIALIZE_BYTES", 0)
+    other = os.path.join(os.path.dirname(os.path.abspath(sf_dir)), "sf0.01")
+    if not os.path.isdir(other):
+        pytest.skip(f"no {other}")
+    frames = [dedup.dedup_minhash_lsh(spark, d) for d in (sf_dir, other)]
+    for df in frames:
+        assert "lshband_mat_" in _plan(df)
+        df.collect()
+
+
 def test_update_delete_noop_publishes_no_version(spark, tmp_path):
     target = str(tmp_path / "noop_t")
     df = spark.createDataFrame(
